@@ -57,6 +57,18 @@ The Python DS API has no column pruning yet, so the ``columns`` option is
 the projection knob (the reader otherwise decodes every stored column; the
 kernel's late materialization still skips non-predicate columns for pruned
 chunks).
+
+Relations from the stored schema: a relation without a user schema starts
+a Python worker at registration to call :meth:`ChunkStoreDataSource.schema`.
+:func:`register_relations` with ``stored_schema=True`` instead reads the
+store's ``spark_schema`` (projected to ``columns``) on the driver and passes
+it as the user schema, so registering starts no worker. The SQL router
+(:func:`flowforge.sqlagg.store_agg_sql`) registers its relations that way:
+a routed statement never builds this module's reader at all, it runs the
+engine kernels over driver-built bucket frames. A scan of a user-schema
+relation pays the data source instance at scan time instead, so a statement
+that falls back re-registers inferred-schema relations through
+:func:`store_sql`.
 """
 
 from __future__ import annotations
@@ -104,12 +116,33 @@ def register(spark: SparkSession) -> None:
 
 
 def _load(spark: SparkSession, out_dir: str, columns: list[str] | None,
-          pushdown: bool):
+          pushdown: bool, stored_schema: bool = False):
     reader = (spark.read.format("flowforge").option("path", out_dir)
               .option("pushdown", "true" if pushdown else "false"))
     if columns:
         reader = reader.option("columns", ",".join(columns))
+    if stored_schema:
+        # a user schema skips the Python worker that would call
+        # ChunkStoreDataSource.schema(); the data source instance is then
+        # only created if the relation is scanned
+        reader = reader.schema(_store_schema(_read_meta(out_dir), columns))
     return reader.load()
+
+
+def register_relations(spark: SparkSession, stores: dict[str, str],
+                       columns: dict[str, list[str]] | None = None, *,
+                       pushdown: bool = True,
+                       stored_schema: bool = False) -> None:
+    """Bind each store to its view name as a fresh relation (fresh
+    provider -> fresh plan cache, see module docstring). ``columns``:
+    optional per-view projection. ``stored_schema`` types the relations
+    from the store's ``spark_schema`` read on the driver, so registering
+    starts no Python worker; a scan of such a relation pays that worker
+    later, so it suits statements that are expected never to scan."""
+    register(spark)
+    for name, out_dir in stores.items():
+        _load(spark, out_dir, (columns or {}).get(name), pushdown,
+              stored_schema).createOrReplaceTempView(name)
 
 
 def max_store_refs(analyzed) -> int:
@@ -163,19 +196,13 @@ def store_sql(spark: SparkSession, sql: str, stores: dict[str, str],
     ``stores``: view name -> store dir. ``columns``: optional per-view
     projection (the Python DS API has no column pruning; project here so
     non-predicate columns aren't decoded at all)."""
-    register(spark)
-    for name, out_dir in stores.items():
-        cols = (columns or {}).get(name)
-        _load(spark, out_dir, cols, pushdown=True).createOrReplaceTempView(name)
+    register_relations(spark, stores, columns)
     df = spark.sql(sql)
     if max_store_refs(df._jdf.queryExecution().analyzed()) > 1:
         # self-union / self-join over one store: pushdown reader state
         # would be shared across the scans (see max_store_refs) — fall
         # back to the always-correct full-decode relations
-        for name, out_dir in stores.items():
-            cols = (columns or {}).get(name)
-            _load(spark, out_dir, cols,
-                  pushdown=False).createOrReplaceTempView(name)
+        register_relations(spark, stores, columns, pushdown=False)
         return spark.sql(sql)
     return df
 
@@ -208,6 +235,19 @@ def _read_meta(out_dir: str) -> dict:
     return meta
 
 
+def _store_schema(meta: dict, columns: list[str] | None) -> T.StructType:
+    """The stored ``spark_schema``, projected to ``columns`` when given."""
+    spark_schema = T.StructType.fromJson(meta["spark_schema"])
+    if not columns:
+        return spark_schema
+    by_name = {f.name: f for f in spark_schema.fields}
+    unknown = [c for c in columns if c not in by_name]
+    if unknown:
+        raise ValueError(
+            f"unknown columns {unknown}; store has {list(by_name)}")
+    return T.StructType([by_name[c] for c in columns])
+
+
 class ChunkStoreDataSource(DataSource):
     """``spark.read.format("flowforge").option("path", store_dir)``."""
 
@@ -224,18 +264,10 @@ class ChunkStoreDataSource(DataSource):
         return out_dir
 
     def schema(self) -> T.StructType:
-        meta = _read_meta(self._out_dir())
-        spark_schema = T.StructType.fromJson(meta["spark_schema"])
-        cols_opt = self.options.get("columns")
-        if not cols_opt:
-            return spark_schema
-        columns = [c.strip() for c in cols_opt.split(",") if c.strip()]
-        by_name = {f.name: f for f in spark_schema.fields}
-        unknown = [c for c in columns if c not in by_name]
-        if unknown:
-            raise ValueError(
-                f"unknown columns {unknown}; store has {list(by_name)}")
-        return T.StructType([by_name[c] for c in columns])
+        cols_opt = self.options.get("columns") or ""
+        return _store_schema(_read_meta(self._out_dir()),
+                             [c.strip() for c in cols_opt.split(",")
+                              if c.strip()])
 
     def reader(self, schema: T.StructType) -> "ChunkStoreReader":
         return ChunkStoreReader(self._out_dir(), schema, self.options)

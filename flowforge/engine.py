@@ -112,6 +112,31 @@ _CHUNK_FILE_SCHEMA = pa.schema([
 ])
 
 
+def _local_frame(spark: SparkSession, rows: list[tuple],
+                 schema: T.StructType) -> DataFrame:
+    """A small driver-built DataFrame (bucket lists, plan rows, proven
+    partials) as an Arrow-backed ``LocalRelation``. A Python list goes
+    through a pickled RDD whose every collect pays a Python-worker stage;
+    the Arrow table is planned as a ``LocalTableScan`` that runs in the JVM
+    and splits into ``min(len(rows), defaultParallelism)`` partitions, so
+    the kernels stacked on it run in the first stage without a shuffle."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [() for _ in arrow_schema]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+# the bucket frames the read-side kernels run over; all_match marks
+# buckets whose commit records prove every row matches the predicates
+_BUCKETS_SCHEMA = T.StructType([T.StructField("bucket", T.LongType(), False)])
+_FLAGGED_BUCKETS_SCHEMA = T.StructType(
+    _BUCKETS_SCHEMA.fields + [T.StructField("all_match", T.BooleanType(), False)])
+
+
 # --------------------------------------------------------------------------
 # bucket -> task assignment
 # --------------------------------------------------------------------------
@@ -189,8 +214,8 @@ def _partition_one_bucket_per_task(spark: SparkSession, salted: DataFrame,
         key_expr = F.element_at(F.create_map(*entries), F.col(BUCKET_COL))
         out = salted.repartition(n, key_expr)
     else:
-        mapping = spark.createDataFrame(
-            [(int(b), int(k)) for b, k in zip(todo, keys)],
+        mapping = _local_frame(
+            spark, [(int(b), int(k)) for b, k in zip(todo, keys)],
             T.StructType([T.StructField(BUCKET_COL, T.LongType(), False),
                           T.StructField(_PKEY_COL, T.LongType(), False)]),
         )
@@ -490,7 +515,7 @@ def encode_table(
     todo = [b for b in range(bucket_offset, bucket_offset + buckets)
             if b not in committed]
     if not todo:
-        return spark.createDataFrame([], METRICS_SCHEMA)
+        return _local_frame(spark, [], METRICS_SCHEMA)
 
     bucketed = df.withColumn(BUCKET_COL, bucket_expr)
     if len(todo) < buckets:
@@ -810,14 +835,15 @@ def encode_path(
     committed = manifest.committed_buckets(phash) if resume else set()
     todo = [p for p in plan if p["bucket"] not in committed]
     if not todo:
-        return spark.createDataFrame([], METRICS_SCHEMA)
+        return _local_frame(spark, [], METRICS_SCHEMA)
     plan_schema = T.StructType([
         T.StructField("bucket", T.LongType(), False),
         T.StructField("file", T.StringType(), False),
         T.StructField("row_groups", T.ArrayType(T.IntegerType()), False),
     ])
-    plan_df = spark.createDataFrame(
-        [(p["bucket"], p["file"], p["row_groups"]) for p in todo], plan_schema)
+    plan_df = _local_frame(
+        spark, [(p["bucket"], p["file"], p["row_groups"]) for p in todo],
+        plan_schema)
     # tasks scale with CORES, not buckets (round 5, encode-wall item): one
     # task per bucket pays a Python-worker round trip per bucket — measured
     # ~50 ms x 62 tasks at local[4], a visible slice of the wall. Group
@@ -838,8 +864,8 @@ def encode_path(
         keys = _bijective_partition_keys(n_tasks)
         per = -(-len(todo) // n_tasks)
         key_col = [int(keys[i // per]) for i in range(len(todo))]
-        key_df = spark.createDataFrame(
-            [(p["bucket"], k) for p, k in zip(todo, key_col)],
+        key_df = _local_frame(
+            spark, [(p["bucket"], k) for p, k in zip(todo, key_col)],
             T.StructType([T.StructField("bucket", T.LongType(), False),
                           T.StructField(_PKEY_COL, T.LongType(), False)]))
         plan_df = (plan_df.join(F.broadcast(key_df), "bucket")
@@ -1560,18 +1586,16 @@ def count_table(spark: SparkSession, out_dir: str,
         recs = _lineage_records_df(spark, Manifest(out_dir),
                                    meta["plan_hash"])
         if recs is None:
-            return spark.createDataFrame([(0,)], _COUNT_SCHEMA)
+            return _local_frame(spark, [(0,)], _COUNT_SCHEMA)
         return recs.select(
             F.get_json_object("record", "$.n_rows").cast("long").alias("n")
         ).agg(F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("cnt"))
     plan = count_plan(out_dir, predicates)
     preds, full_rows = plan["predicates"], plan["full_rows"]
     if not plan["partial"]:
-        return spark.createDataFrame([(full_rows,)], _COUNT_SCHEMA)
-    buckets_df = spark.createDataFrame(
-        [(b,) for b in plan["partial"]],
-        T.StructType([T.StructField("bucket", T.LongType(), False)])
-    ).repartition(max(1, len(plan["partial"])))
+        return _local_frame(spark, [(full_rows,)], _COUNT_SCHEMA)
+    buckets_df = _local_frame(spark, [(b,) for b in plan["partial"]],
+                              _BUCKETS_SCHEMA)
     part = buckets_df.mapInArrow(_make_count_kernel(out_dir, preds),
                                  _COUNT_SCHEMA)
     return part.agg(
@@ -1856,12 +1880,8 @@ def topk_table(spark: SparkSession, out_dir: str, order_col: str, k: int,
     out_names = list(dict.fromkeys(list(use_cols) + [order_col, tie_col]))
     out_schema = T.StructType([by_name[c] for c in out_names])
     if not keep:
-        return spark.createDataFrame([], out_schema).select(*use_cols)
-    buckets_df = spark.createDataFrame(
-        sorted(keep),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(keep))
+        return _local_frame(spark, [], out_schema).select(*use_cols)
+    buckets_df = _local_frame(spark, sorted(keep), _FLAGGED_BUCKETS_SCHEMA)
     partials = buckets_df.mapInArrow(
         _make_topk_kernel(out_dir, order_col, tie_col, out_names, k,
                           descending, order_float_type, preds),
@@ -2152,15 +2172,13 @@ def agg_table(spark: SparkSession, out_dir: str, aggs: dict,
             _combine_agg(acc, alias, spec[0], st, int(rec["n_rows"]))
     part_schema = T.StructType([
         T.StructField(a, T.LongType(), True) for a in out_names])
-    driver_row = spark.createDataFrame(
-        [tuple(_wrap_i64(acc[a]) for a in out_names)], part_schema)
+    driver_row = _local_frame(
+        spark, [tuple(_wrap_i64(acc[a]) for a in out_names)], part_schema)
     if not partial:
         parts = driver_row
     else:
-        buckets_df = spark.createDataFrame(
-            [(int(r["bucket"]),) for r in partial],
-            T.StructType([T.StructField("bucket", T.LongType(), False)])
-        ).repartition(max(1, len(partial)))
+        buckets_df = _local_frame(
+            spark, [(int(r["bucket"]),) for r in partial], _BUCKETS_SCHEMA)
         parts = buckets_df.mapInArrow(
             _make_agg_kernel(out_dir, preds, plan_aggs, out_names),
             part_schema
@@ -2259,12 +2277,8 @@ def value_counts_table(spark: SparkSession, out_dir: str, column: str,
     rows = [(int(r["bucket"]), True) for r in full] \
         + [(int(r["bucket"]), False) for r in partial]
     if not rows:
-        return spark.createDataFrame([], out_schema)
-    buckets_df = spark.createDataFrame(
-        sorted(rows),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(rows))
+        return _local_frame(spark, [], out_schema)
+    buckets_df = _local_frame(spark, sorted(rows), _FLAGGED_BUCKETS_SCHEMA)
     partials = buckets_df.mapInArrow(
         _make_value_counts_kernel(out_dir, column, preds), out_schema)
     if not merge:
@@ -2478,12 +2492,8 @@ def group_agg_table(spark: SparkSession, out_dir: str, group_col: str,
     rows = [(int(r["bucket"]), True) for r in full] \
         + [(int(r["bucket"]), False) for r in partial]
     if not rows:
-        return spark.createDataFrame([], out_schema)
-    buckets_df = spark.createDataFrame(
-        sorted(rows),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(rows))
+        return _local_frame(spark, [], out_schema)
+    buckets_df = _local_frame(spark, sorted(rows), _FLAGGED_BUCKETS_SCHEMA)
     partials = buckets_df.mapInArrow(
         _make_group_agg_kernel(out_dir, group_col, agg_col, preds,
                                count_only=count_only),
@@ -2739,12 +2749,8 @@ def group_multi_table(spark: SparkSession, out_dir: str,
     rows = [(int(r["bucket"]), True) for r in full] \
         + [(int(r["bucket"]), False) for r in partial]
     if not rows:
-        return spark.createDataFrame([], out_schema)
-    buckets_df = spark.createDataFrame(
-        sorted(rows),
-        T.StructType([T.StructField("bucket", T.LongType(), False),
-                      T.StructField("all_match", T.BooleanType(), False)])
-    ).repartition(len(rows))
+        return _local_frame(spark, [], out_schema)
+    buckets_df = _local_frame(spark, sorted(rows), _FLAGGED_BUCKETS_SCHEMA)
     partials = buckets_df.mapInArrow(
         _make_group_multi_kernel(out_dir, groups, specs, preds,
                                  out_names=[f.name for f in out_schema]),
@@ -2834,9 +2840,8 @@ def decode_table(
         committed = _prune_buckets(nonempty, predicates)
     else:
         committed = sorted(int(r["bucket"]) for r in nonempty)
-    buckets_df = spark.createDataFrame(
-        [(b,) for b in committed], T.StructType([T.StructField("bucket", T.LongType(), False)])
-    ).repartition(max(1, len(committed)))
+    buckets_df = _local_frame(spark, [(b,) for b in committed],
+                              _BUCKETS_SCHEMA)
     return buckets_df.mapInArrow(
         _make_decode_kernel(out_dir, list(columns), predicates), out_schema
     )
@@ -2927,7 +2932,7 @@ def metrics_table(spark: SparkSession, out_dir: str) -> DataFrame:
         )
     recs = _lineage_records_df(spark, manifest, meta["plan_hash"])
     if recs is None:
-        return spark.createDataFrame([], METRICS_SCHEMA)
+        return _local_frame(spark, [], METRICS_SCHEMA)
     parsed = recs.select(
         "bucket", F.from_json("record", _LINEAGE_RECORD_SCHEMA).alias("r"))
     # empty-bucket commits have columns == {} and drop out of the explode,

@@ -4682,10 +4682,7 @@ def route_agg_sql_reason(spark: SparkSession, sql: str,
     in SELECT"``), so a
     user staring at a slow statement can see which clause to rephrase
     (surfaced by ``jobs/query.py --explain``)."""
-    datasource.register(spark)
-    for name, out_dir in stores.items():
-        datasource._load(spark, out_dir, None,
-                         pushdown=True).createOrReplaceTempView(name)
+    datasource.register_relations(spark, stores, stored_schema=True)
     analyzed = spark.sql(sql)._jdf.queryExecution().analyzed()
     try:
         r = _route(analyzed, stores)
@@ -4702,29 +4699,21 @@ def store_agg_sql(spark: SparkSession, sql: str, stores: dict[str, str],
     Routable aggregate shapes are answered from chunk/commit metadata and
     codec-layer kernels (see module docstring); everything else runs as
     :func:`flowforge.datasource.store_sql` (full filter pushdown). Always
-    correct; routing only changes the cost."""
-    datasource.register(spark)
-    for name, out_dir in stores.items():
-        cols = (columns or {}).get(name)
-        datasource._load(spark, out_dir, cols,
-                         pushdown=True).createOrReplaceTempView(name)
-    df = spark.sql(sql)
-    analyzed = df._jdf.queryExecution().analyzed()
+    correct; routing only changes the cost.
+
+    The relations are typed from each store's stored ``spark_schema``, so
+    registering and routing start no Python worker, and a routed plan
+    never builds the Python Data Source reader. A statement that falls
+    back re-registers inferred-schema relations and runs as
+    :func:`flowforge.datasource.store_sql`: a scan of a user-schema
+    relation would pay for creating the data source instance at scan
+    time."""
+    datasource.register_relations(spark, stores, columns, stored_schema=True)
+    analyzed = spark.sql(sql)._jdf.queryExecution().analyzed()
     try:
-        r = _route(analyzed, stores)
-        return _execute_route(spark, r)
+        return _execute_route(spark, _route(analyzed, stores))
     except (_Unroutable, ValueError):
         # ValueError = an engine-side planning restriction the router did
         # not pre-check (e.g. a column name colliding with a kernel output
         # alias); the statement is still valid SQL, so execute it normally
-        if datasource.max_store_refs(analyzed) > 1:
-            # self-union / self-join over one store: the pushdown reader
-            # state is shared across identical relations at execution
-            # (Spark 4.1.2), so one branch would silently read the
-            # other's pruned rows — re-register full-decode views
-            for name, out_dir in stores.items():
-                cols = (columns or {}).get(name)
-                datasource._load(spark, out_dir, cols,
-                                 pushdown=False).createOrReplaceTempView(name)
-            return spark.sql(sql)
-        return df
+        return datasource.store_sql(spark, sql, stores, columns)
